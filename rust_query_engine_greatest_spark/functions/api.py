@@ -108,6 +108,14 @@ def run_greatest(columns: list[list], spark: SparkSession | None = None) -> list
                 for f in schema.fields
             ]
         )
+    # A column mixing ints and floats infers DoubleType, but
+    # createDataFrame rejects a Python int in a DoubleType field: widen
+    # its values to float the same way.
+    columns = [
+        [None if v is None else float(v) for v in c]
+        if isinstance(f.dataType, T.DoubleType) else c
+        for c, f in zip(columns, schema.fields)
+    ]
     rows = list(zip(*columns))
     df = spark.createDataFrame(rows, schema)
     out = df.select(F.greatest(*[F.col(f.name) for f in schema.fields]).alias("g"))

@@ -14,6 +14,16 @@ Five families, each scale-shaped for 100 TB:
 - Embedding cosine: exact within blocks; the scale path is LSH/IVF
   bucketing (similarity.py) feeding the same verifier.
 
+MinHash and SimHash share one banded-LSH core: signature → band rows
+→ `_bucket_pairs` (in-bucket pair expansion under the `max_bucket`
+hot-bucket guard; SimHash runs its Hamming test inside the pair array)
+→ exact verify (`_jaccard_verify` for MinHash). SimHash's hot buckets
+are split into sub-band buckets by `_simhash_hot_split`, which
+`simhash_pairs` and `simhash_overflow` both use. Both persisted-index
+probes band only the batch and go through `_probe_join`, and
+`_ensure_parallelism` guards every under-parallel scan. The bucketed
+cosine top-k searches share `similarity._cosine_topk`.
+
 Everything below is built-in-expression-only (xxhash64, explode,
 groupBy, zip_with/aggregate) — no Python in the hot path.
 """
@@ -26,16 +36,17 @@ from pyspark.sql import functions as F
 from .text import distinct_tokens, fingerprint_md5
 
 
-def _ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Round-robin repartition when the scan delivers fewer partitions
-    than cores. Single-row-group parquet (the TESTDATA layout; also any
-    small-file corner of a real lake) otherwise serializes the heavy
-    per-row hashing these operators do onto one task — one cheap
+def _ensure_parallelism(df: DataFrame, *keys: str) -> DataFrame:
+    """Repartition when the scan delivers fewer partitions than cores:
+    round-robin, or hashed on `keys` when a downstream aggregate can
+    reuse that exchange. Single-row-group parquet (the TESTDATA layout;
+    also any small-file corner of a real lake) otherwise serializes the
+    heavy per-row hashing these operators do onto one task — one cheap
     narrow-row shuffle buys full-cluster fan-out for everything after.
     No-op when the scan is already parallel (the 100 TB case)."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < min(target, 8):
-        return df.repartition(target)
+        return df.repartition(target, *keys)
     return df
 
 
@@ -167,41 +178,71 @@ def jaccard_pairs(
 
 
 def _bucket_pairs(
-    banded: DataFrame, bucket_cols: list[str], max_bucket: int = 1024
+    banded: DataFrame,
+    bucket_cols: list[str],
+    max_bucket: int = 1024,
+    max_hamming: int | None = None,
 ) -> DataFrame:
-    """(id, bucket) rows → distinct candidate (id_a < id_b) pairs that
-    share a bucket. ONE groupBy shuffle + in-bucket pair expansion —
-    not a bucket self-join, which would execute the whole upstream
-    subtree twice (both join inputs) and shuffle it twice. LSH bucket
-    membership is small by construction when banding parameters fit the
-    corpus, BUT a degenerate band value (e.g. near-empty documents all
-    hashing one band) would otherwise put an O(n²) pair array on a
-    single executor row — an OOM, not a slowdown. `max_bucket` guards
-    that: buckets larger than the cap are excluded from pair expansion
-    (1024 ids → ≤ ~0.5M pair structs ≈ 8 MB, the largest cell we allow).
-    Like `jaccard_pairs(max_df=...)`, the cap affects RECALL only and
-    only for pairs whose every shared bucket is degenerate; use
+    """(id, bucket) rows → candidate (id_a < id_b) pairs that share a
+    bucket: the in-bucket pair expansion under every banded-LSH path.
+    ONE groupBy shuffle + in-bucket pair expansion — not a bucket
+    self-join, which would execute the whole upstream subtree twice
+    (both join inputs) and shuffle it twice. A pair sharing several
+    buckets comes out once per bucket; callers dedup once, after any
+    union of banded branches (r10: a per-branch distinct was an extra
+    exchange the union's distinct immediately repeated).
+
+    With `max_hamming` (SimHash), rows carry `fp` and members are
+    (id, fp) structs: the Hamming test runs INSIDE the pair array,
+    before any explode, and pairs carry their `hamming`. That avoids two
+    id→fp join-backs AND shrinks the exploded volume to the survivors
+    only — at sf0.1 the template-clustered documents table emits 1.26M
+    raw candidates but only ~0.4M with Hamming ≤ 3 (measured).
+
+    Hot-bucket guard: LSH bucket membership is small by construction
+    when banding parameters fit the corpus, BUT a degenerate band value
+    (e.g. near-empty documents all hashing one band) would otherwise put
+    an O(n²) pair array on a single executor row — an OOM, not a
+    slowdown. Buckets larger than `max_bucket` are excluded from pair
+    expansion; a bucket at exactly max_bucket members materializes
+    C(max_bucket, 2) pair-structs in ONE aggregated row (~524k structs ≈
+    tens of MB at the default 1024 — the per-row executor-memory cost
+    grows QUADRATICALLY, so raise it deliberately; pinned by
+    test_pipeline.py::test_simhash_max_bucket_pair_array_bound). Like
+    `jaccard_pairs(max_df=...)`, the cap affects RECALL only and only
+    for pairs whose every shared bucket is degenerate; use
     `bucket_overflow(...)` on the same banded input to count/log what
     was dropped (no silent truncation at scale)."""
+    if max_hamming is None:
+        name, member = "ids", F.col("id")
+
+        def pair(x, y):
+            return F.struct(x.alias("id_a"), y.alias("id_b"))
+
+        def keep(p):
+            return p["id_a"] < p["id_b"]
+    else:
+        name, member = "xs", F.struct("id", "fp")
+
+        def pair(x, y):
+            return F.struct(x["id"].alias("id_a"), y["id"].alias("id_b"),
+                            hamming64(x["fp"], y["fp"]).alias("hamming"))
+
+        def keep(p):
+            return (p["id_a"] < p["id_b"]) & (p["hamming"] <= max_hamming)
+    xs = F.col(name)
     pair_structs = F.filter(
-        F.flatten(
-            F.transform(
-                F.col("ids"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                    lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                ),
-            )
-        ),
-        lambda p: p["id_a"] < p["id_b"],
+        F.flatten(F.transform(
+            xs, lambda x, i: F.transform(F.slice(xs, i + 2, F.size(xs)),
+                                         lambda y: pair(x, y)))),
+        keep,
     )
     return (
         banded.groupBy(*bucket_cols)
-        .agg(F.sort_array(F.collect_set("id")).alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket))
+        .agg(F.sort_array(F.collect_set(member)).alias(name))
+        .filter((F.size(name) > 1) & (F.size(name) <= max_bucket))
         .select(F.explode(pair_structs).alias("p"))
-        .select("p.id_a", "p.id_b")
-        .distinct()
+        .select("p.*")
     )
 
 
@@ -286,10 +327,8 @@ def shingle_rows(
         F.col(id_col).alias("id"),
         F.lower(F.coalesce(F.col(text_col), F.lit(""))).alias("__t"),
     )
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if narrow.rdd.getNumPartitions() < min(target, 8):
-        narrow = narrow.repartition(target, "id")
-    toksed = narrow.select("id", F.split("__t", r" +").alias("__toks"))
+    toksed = _ensure_parallelism(narrow, "id").select(
+        "id", F.split("__t", r" +").alias("__toks"))
     n = F.size("__toks")
     idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
     grams = F.transform(
@@ -361,6 +400,22 @@ def _band_rows(sig_rows: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     ).select("id", "bb.band_id", "bb.band_hash")
 
 
+def _probe_join(
+    banded_b: DataFrame, index: DataFrame, band_col: str, *carry: str
+) -> DataFrame:
+    """The index probe's one join: a batch's band rows equi-joined on
+    (band_id, `band_col`) into a persisted index, ids renamed batch_id /
+    corpus_id and each `carry` column suffixed _b / _c. Only the batch
+    was banded — the corpus is never re-scanned, re-signed or
+    re-shuffled."""
+    def side(df, id_as, sfx):
+        return df.select(F.col("id").alias(id_as),
+                         *[F.col(c).alias(f"{c}_{sfx}") for c in carry],
+                         "band_id", band_col)
+    return side(banded_b, "batch_id", "b").join(
+        side(index, "corpus_id", "c"), ["band_id", band_col])
+
+
 def minhash_index_rows(
     df: DataFrame,
     id_col: str,
@@ -406,31 +461,45 @@ def minhash_index_probe(
     sh_b = shingle_rows(batch, id_col, text_col, shingle_k)
     banded_b = _band_rows(minhash_signatures(sh_b, num_hashes),
                           num_hashes, bands)
-    cand = (
-        banded_b.select(F.col("id").alias("batch_id"), "band_id", "band_hash")
-        .join(index.select(F.col("id").alias("corpus_id"),
-                           "band_id", "band_hash"),
-              ["band_id", "band_hash"])
-        .select("batch_id", "corpus_id")
-        .distinct()
-    )
+    cand = (_probe_join(banded_b, index, "band_hash")
+            .select("batch_id", "corpus_id").distinct())
     if verify_texts is None:
         return cand
     hit_corpus = verify_texts.join(
         cand.select(F.col("corpus_id").alias(id_col)).distinct(),
         id_col, "left_semi")
     sh_c = shingle_rows(hit_corpus, id_col, text_col, shingle_k)
-    sets_b = (sh_b.groupBy("id").agg(F.collect_set("s").alias("sh_a"))
-              .withColumnRenamed("id", "batch_id"))
-    sets_c = (sh_c.groupBy("id").agg(F.collect_set("s").alias("sh_b"))
-              .withColumnRenamed("id", "corpus_id"))
+    return _jaccard_verify(cand, sh_b, sh_c, "batch_id", "corpus_id", threshold)
+
+
+def _jaccard_verify(
+    cand: DataFrame,
+    rows_a: DataFrame,
+    rows_b: DataFrame,
+    a: str,
+    b: str,
+    threshold: float,
+    null_safe: bool = False,
+) -> DataFrame:
+    """Exact shingle-Jaccard verify of candidate pairs (a, b) — the
+    verify step under both MinHash paths. Each side's shingle set is a
+    collect_set over its (id, pos, s) shingle rows (the set IS the
+    distinct step; no second shingling pass), joined to the candidates
+    on id. `null_safe` joins with <=> instead of an equi-join: see
+    minhash_lsh_pairs for why that keeps its exchange reused."""
+    out = cand
+    for rows, col, name in ((rows_a, a, "sh_a"), (rows_b, b, "sh_b")):
+        key = f"__i{name[-1]}" if null_safe else col
+        sets = (rows.groupBy("id").agg(F.collect_set("s").alias("sh"))
+                .select(F.col("id").alias(key), F.col("sh").alias(name)))
+        out = out.join(sets, F.col(col).eqNullSafe(F.col(key))
+                       if null_safe else col)
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
     return (
-        cand.join(sets_b, "batch_id").join(sets_c, "corpus_id")
-        .withColumn("jac", inter / union)
+        out.withColumn("jac", inter / union)
         .filter(F.col("jac") >= threshold)
-        .select("batch_id", "corpus_id", "jac")
+        .select(a, b, "jac")
     )
 
 
@@ -457,36 +526,25 @@ def minhash_lsh_pairs(
     sh_rows = shingle_rows(df, id_col, text_col, shingle_k)
     sig_rows = minhash_signatures(sh_rows, num_hashes)
     banded = _band_rows(sig_rows, num_hashes, bands)
-    cand = _bucket_pairs(banded, ["band_id", "band_hash"], max_bucket=max_bucket)
+    cand = _bucket_pairs(banded, ["band_id", "band_hash"], max_bucket).distinct()
     if not verify:
         return cand
-    # Exact-Jaccard verify sets, built from the SAME shingle rows
-    # (collect_set is the distinct step) — no second interpreted
-    # shingling pass; the id partitioning from shingle_rows is reused.
-    # The verify joins are null-safe (r10, guide §7.2 — the same
-    # IsNotNull-pushdown disease semantic_dedup had): a plain inner
-    # equi-join on id_a/id_b makes the optimizer infer IsNotNull and
-    # push it into each sh_sets branch, which makes those subtrees
-    # differ from the signature branch — ReuseExchange stops firing and
-    # the corpus is scanned+shingled once PER branch (3× total,
-    # plan-verified in plans/r10/pipe_dedup_minhash_before.txt: 3
-    # documents scans). cand ids are provably never NULL (the
-    # id_a < id_b pair filter evaluates NULL to false), and a NULL
-    # sh_sets id matches a non-NULL cand id under neither operator, so
-    # the join pairs are identical while EqualNullSafe triggers no
-    # inference — all three branches re-read one exchange.
-    sh_sets = sh_rows.groupBy("id").agg(F.collect_set("s").alias("sh"))
-    sh_a = sh_sets.select(F.col("id").alias("__ia"), F.col("sh").alias("sh_a"))
-    sh_b = sh_sets.select(F.col("id").alias("__ib"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    return (
-        cand.join(sh_a, F.col("id_a").eqNullSafe(F.col("__ia")))
-        .join(sh_b, F.col("id_b").eqNullSafe(F.col("__ib")))
-        .withColumn("jac", inter / union)
-        .filter(F.col("jac") >= threshold)
-        .select("id_a", "id_b", "jac")
-    )
+    # Verify sets come from the SAME shingle rows, so the id
+    # partitioning from shingle_rows is reused. The verify joins are
+    # null-safe (r10, guide §7.2 — the same IsNotNull-pushdown disease
+    # semantic_dedup had): a plain inner equi-join on id_a/id_b makes
+    # the optimizer infer IsNotNull and push it into each shingle-set
+    # branch, which makes those subtrees differ from the signature
+    # branch — ReuseExchange stops firing and the corpus is
+    # scanned+shingled once PER branch (3 documents scans in the plan,
+    # against 1 scan + 2 ReusedExchange reads with <=>). cand ids are
+    # provably never NULL (the id_a < id_b pair filter evaluates NULL
+    # to false), and a NULL shingle-set id matches a non-NULL cand id
+    # under neither operator, so the join pairs are identical while
+    # EqualNullSafe triggers no inference — all three branches re-read
+    # one exchange.
+    return _jaccard_verify(cand, sh_rows, sh_rows, "id_a", "id_b", threshold,
+                           null_safe=True)
 
 
 # ---- SimHash --------------------------------------------------------------
@@ -533,17 +591,14 @@ def hamming64(a: Column, b: Column) -> Column:
 
 def _simhash_base(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, fp) rows for the simhash family. The fold formulation was
-    re-A/B'd against an exploded-token + 64-codegen-SUM row form in r10
-    (tools/opt_ab_r10.py, VERDICT r9 #3): the fold stayed 4-6× faster
-    at sf0.1 even under the new shared-exchange input (noop best 0.38 s
-    vs 2.15 s) — the r4 result did not invert, the row form's 1.5M-row
+    re-A/B'd against an exploded-token + 64-codegen-SUM row form in r10:
+    the fold stayed 4-6× faster at sf0.1 even under the shared-exchange
+    input (noop best 0.38 s vs 2.15 s) — the row form's 1.5M-row
     explode + 64 aggregate buffers costs more than the interpreted
     zip_with saves. Not promoted."""
     return _ensure_parallelism(df).select(
         F.col(id_col).alias("id"), simhash64(text_col).alias("fp")
     )
-
-
 
 
 def _simhash_banded(base: DataFrame, bands: int) -> DataFrame:
@@ -613,57 +668,6 @@ def _sub_keys_expr(bands: int, max_hamming: int) -> Column:
     return expr
 
 
-def _bucket_pairs_hamming(
-    banded: DataFrame,
-    bucket_cols: list[str],
-    max_hamming: int,
-    max_bucket: int = 1024,
-    distinct: bool = True,
-) -> DataFrame:
-    """_bucket_pairs for SimHash: (id, fp, bucket) rows → candidate
-    (id_a, id_b, hamming) pairs with the Hamming test applied INSIDE
-    the in-bucket pair array, before any explode. Carrying fp through
-    the collect avoids the generic form's two id→fp join-backs AND
-    shrinks the exploded/deduped volume to the survivors only — at
-    sf0.1 the template-clustered documents table emits 1.26M raw
-    candidates but only ~0.4M with Hamming ≤ 3 (measured; the join-back
-    form shuffled all 1.26M twice and distinct'd them once more).
-
-    Memory bound: a bucket at exactly max_bucket members materializes
-    C(max_bucket, 2) ≈ max_bucket²/2 pair-structs inside ONE aggregated
-    row before the explode (~524k structs ≈ tens of MB at the default
-    1024) — the per-row executor-memory cost grows QUADRATICALLY in
-    max_bucket, so raise it deliberately. Pinned at the default by
-    test_pipeline.py::test_simhash_max_bucket_pair_array_bound."""
-    pair_structs = F.filter(
-        F.flatten(
-            F.transform(
-                F.col("xs"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("xs"), i + 2, F.size(F.col("xs"))),
-                    lambda y: F.struct(
-                        x["id"].alias("id_a"), y["id"].alias("id_b"),
-                        F.bit_count(x["fp"].bitwiseXOR(y["fp"])).alias("hamming"),
-                    ),
-                ),
-            )
-        ),
-        lambda p: (p["id_a"] < p["id_b"]) & (p["hamming"] <= max_hamming),
-    )
-    out = (
-        banded.groupBy(*bucket_cols)
-        .agg(F.sort_array(F.collect_set(F.struct("id", "fp"))).alias("xs"))
-        .filter((F.size("xs") > 1) & (F.size("xs") <= max_bucket))
-        .select(F.explode(pair_structs).alias("p"))
-        .select("p.id_a", "p.id_b", "p.hamming")
-    )
-    # distinct=False for callers that union several banded branches and
-    # dedup ONCE after the union (r10: one exchange per branch saved;
-    # A/B −3-4% at sf0.1, pair sets identical) — the per-branch
-    # distinct was immediately re-deduped by the union's distinct.
-    return out.distinct() if distinct else out
-
-
 def simhash_pairs(
     df: DataFrame,
     id_col: str,
@@ -701,19 +705,17 @@ def simhash_pairs_from_fps(
     rows — split out so hot-bucket recall is testable on synthetic
     fingerprint fixtures (test_pipeline.py plants a bucket where every
     member shares one band and asserts sub-banding recovers the pairs).
-
-    The explicit hash repartition pins an exchange ABOVE whatever
-    produced `base` — for simhash_pairs that is the simhash64 fold, the
-    op's dominant per-row cost — so the census and both tag consumers
-    below re-read its shuffle output (ReusedExchange) instead of each
-    re-executing the producer subtree. The exchange carries n narrow
-    (id, fp) rows: 16 bytes/row at any corpus size, orders cheaper than
-    one extra corpus scan+fold."""
-    sc = base.sparkSession.sparkContext
-    return _simhash_pairs_core(
-        base.repartition(sc.defaultParallelism, "id"),
-        max_hamming, bands, max_bucket,
-    )
+    Healthy buckets pair directly; hot rows pair inside their sub-band
+    buckets (_simhash_hot_split)."""
+    healthy, sub = _simhash_hot_split(base, max_hamming, bands, max_bucket)
+    cand_ok = _bucket_pairs(
+        healthy, ["band_id", "band_val"], max_bucket, max_hamming)
+    cand_sub = _bucket_pairs(
+        sub, ["band_id", "band_val", "sub_id", "sub_val"], max_bucket,
+        max_hamming)
+    # ONE distinct after the union dedups both within-branch
+    # (cross-band) and cross-branch duplicates
+    return cand_ok.unionByName(cand_sub).distinct()
 
 
 def _simhash_census_hot(banded: DataFrame, max_bucket: int) -> DataFrame:
@@ -748,14 +750,21 @@ def _hot_cond() -> Column:
     )
 
 
-def _simhash_pairs_core(
-    base: DataFrame,
-    max_hamming: int = 3,
-    bands: int = 4,
-    max_bucket: int = 1024,
-) -> DataFrame:
-    """Banding/pairing over (id, fp) rows whose producing plan ends in
-    a reusable exchange (see callers).
+def _simhash_hot_split(
+    base: DataFrame, max_hamming: int, bands: int, max_bucket: int
+) -> tuple[DataFrame, DataFrame]:
+    """(id, fp) rows → (healthy, sub): the band rows of buckets within
+    max_bucket, and the rows of hot buckets exploded over their
+    max_hamming+1 sub-band keys (sub_id, sub_val). The hot-bucket split
+    shared by simhash_pairs and simhash_overflow.
+
+    The explicit hash repartition pins an exchange ABOVE whatever
+    produced `base` — for simhash_pairs that is the simhash64 fold, the
+    op's dominant per-row cost — so the census and both tag consumers
+    re-read its shuffle output (ReusedExchange, plan-pinned in
+    test_plans.py) instead of each re-executing the producer subtree.
+    The exchange carries n narrow (id, fp) rows: 16 bytes/row at any
+    corpus size, orders cheaper than one extra corpus scan+fold.
 
     r10 shape (guide §2.5 skew): bucket sizes come from a bounded
     census AGGREGATE + broadcast hot-key anti/semi joins, not the r9
@@ -768,34 +777,17 @@ def _simhash_pairs_core(
     map-side (_simhash_census_hot), the tag joins are broadcast
     (map-side, one tiny build reused by both), the healthy branch's
     groupBy cells are ≤ max_bucket by construction, and hot rows cross
-    their exchange already spread over (max_hamming+1) sub-band keys.
-    The fp fold still runs exactly once: census and both tag branches
-    re-read the exchange under `base` (ReusedExchange, plan-pinned in
-    test_plans.py)."""
-    banded = _simhash_banded(base, bands)
-    hot = _simhash_census_hot(banded, max_bucket)
-    healthy = banded.join(F.broadcast(hot), _hot_cond(), "left_anti")
-    cand_ok = _bucket_pairs_hamming(
-        healthy.select("id", "fp", "band_id", "band_val"),
-        ["band_id", "band_val"], max_hamming, max_bucket=max_bucket,
-        distinct=False,
-    )
+    their exchange already spread over (max_hamming+1) sub-band keys."""
+    sc = base.sparkSession.sparkContext
+    banded = _simhash_banded(base.repartition(sc.defaultParallelism, "id"), bands)
+    hot = F.broadcast(_simhash_census_hot(banded, max_bucket))
     sub = (
-        banded.join(F.broadcast(hot), _hot_cond(), "left_semi")
+        banded.join(hot, _hot_cond(), "left_semi")
         .select("id", "fp", "band_id", "band_val",
                 F.explode(_sub_keys_expr(bands, max_hamming)).alias("sb"))
         .select("id", "fp", "band_id", "band_val", "sb.sub_id", "sb.sub_val")
     )
-    cand_sub = _bucket_pairs_hamming(
-        sub, ["band_id", "band_val", "sub_id", "sub_val"], max_hamming,
-        max_bucket=max_bucket, distinct=False,
-    )
-    # fp travels through the collect, so the Hamming test runs inside
-    # the pair arrays and the old id→fp join-backs (two shuffles of the
-    # full candidate set) disappear; ONE distinct after the union dedups
-    # both within-branch (cross-band) and cross-branch duplicates — the
-    # per-branch distincts it replaces were pure extra exchanges
-    return cand_ok.unionByName(cand_sub).distinct()
+    return banded.join(hot, _hot_cond(), "left_anti"), sub
 
 
 def simhash_index_rows(
@@ -830,17 +822,10 @@ def simhash_index_probe(
     band equal ⇒ guaranteed recall), Hamming-test the fp pair on the
     joined row, distinct. Returns (batch_id, corpus_id, hamming). The
     corpus is never re-scanned or re-hashed."""
-    b = _simhash_base(batch, id_col, text_col)
-    banded_b = _simhash_banded(b, bands).select(
-        F.col("id").alias("batch_id"), F.col("fp").alias("fp_b"),
-        "band_id", "band_val")
+    banded_b = _simhash_banded(_simhash_base(batch, id_col, text_col), bands)
     return (
-        banded_b.join(
-            index.select(F.col("id").alias("corpus_id"),
-                         F.col("fp").alias("fp_c"), "band_id", "band_val"),
-            ["band_id", "band_val"])
-        .withColumn("hamming",
-                    F.bit_count(F.col("fp_b").bitwiseXOR(F.col("fp_c"))))
+        _probe_join(banded_b, index, "band_val", "fp")
+        .withColumn("hamming", hamming64(F.col("fp_b"), F.col("fp_c")))
         .filter(F.col("hamming") <= max_hamming)
         .select("batch_id", "corpus_id", "hamming")
         .distinct()
@@ -873,31 +858,10 @@ def simhash_overflow_from_fps(
     """simhash_overflow over precomputed (id, fp) rows — split out (like
     simhash_pairs_from_fps) so the documented drop-with-accounting
     behavior of a DOUBLE overflow (a sub-bucket of a hot bucket itself
-    exceeding max_bucket) is testable on planted fingerprint fixtures."""
-    sc = base.sparkSession.sparkContext
-    return _simhash_overflow_core(
-        base.repartition(sc.defaultParallelism, "id"),
-        max_hamming, bands, max_bucket,
-    )
-
-
-def _simhash_overflow_core(
-    base: DataFrame,
-    max_hamming: int = 3,
-    bands: int = 4,
-    max_bucket: int = 1024,
-) -> DataFrame:
-    """Same r10 skew-proof census as _simhash_pairs_core: hot buckets
-    from the bounded aggregate + broadcast semi join, not a count
-    window (see _simhash_pairs_core for why)."""
-    banded = _simhash_banded(base, bands)
-    hot = _simhash_census_hot(banded, max_bucket)
-    sub = (
-        banded.join(F.broadcast(hot), _hot_cond(), "left_semi")
-        .select("id", "band_id", "band_val",
-                F.explode(_sub_keys_expr(bands, max_hamming)).alias("sb"))
-        .select("id", "band_id", "band_val", "sb.sub_id", "sb.sub_val")
-    )
+    exceeding max_bucket) is testable on planted fingerprint fixtures.
+    Same hot split as simhash_pairs_from_fps, so the counted cells are
+    exactly the ones its pair expansion skips."""
+    _, sub = _simhash_hot_split(base, max_hamming, bands, max_bucket)
     return bucket_overflow(
         sub, ["band_id", "band_val", "sub_id", "sub_val"], max_bucket=max_bucket
     )
@@ -1176,11 +1140,11 @@ def semantic_dedup(
     # optimizer infer IsNotNull(cluster) on BOTH sides and push it into
     # the scans — re-embedding the entire K-fold cosine-assignment
     # expression inside a scan-side Filter on each subtree, so every row
-    # paid the assignment twice more (plan-verified r9,
-    # plans/r09/dedup_semantic_before.txt Filters (2)/(6)). cluster is
-    # never NULL by construction (the sims array coalesces to -2.0), so
-    # <=> computes identical pairs while EqualNullSafe, being
-    # null-tolerant, triggers no IsNotNull inference.
+    # paid the assignment twice more (two such scan-side Filters in the
+    # r9 plan). cluster is never NULL by construction (the sims array
+    # coalesces to -2.0), so <=> computes identical pairs while
+    # EqualNullSafe, being null-tolerant, triggers no IsNotNull
+    # inference.
     return (
         assigned.join(F.broadcast(keepers),
                       F.col("cluster").eqNullSafe(F.col("__kcluster")))

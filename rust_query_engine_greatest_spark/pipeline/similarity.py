@@ -3,8 +3,9 @@
 Baseline: brute-force cosine top-k (exact; blocked join + window).
 Scale path: random-hyperplane LSH bucketing — candidates come only from
 the query's bucket (plus optional multi-probe neighbors), turning the
-O(|Q|·|C|) scan into bucket-local work. IVF with learned centroids would
-slot into the same bucket-column contract.
+O(|Q|·|C|) scan into bucket-local work. IVF with learned centroids
+slots into the same bucket-column contract: brute force, LSH and IVF
+all end in one scoring tail, `_cosine_topk`.
 
 Numeric discipline: dot products fold left-to-right in double via
 zip_with + aggregate → deterministic and bit-identical to an explicit
@@ -57,23 +58,43 @@ def brute_force_topk(
     no shuffle of the corpus; then a window top-k on query id. At 100 TB
     corpus the scan parallelizes per-file; only k rows per query cross
     the final shuffle."""
+    return _cosine_topk(queries, corpus, query_id, corpus_id, vec_col, k)
+
+
+def _cosine_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    query_id: str,
+    corpus_id: str,
+    vec_col: str,
+    k: int,
+    key: str | None = None,
+    q_keys: Column | None = None,
+    c_key: Column | None = None,
+) -> DataFrame:
+    """Exact cosine top-k per query over (query, corpus) pairs — the
+    scoring tail of every top-k search here. Without `key` every pair is
+    scored (broadcast cross join); with it, each query row explodes over
+    its probe keys `q_keys` and meets only corpus rows whose `c_key`
+    matches (broadcast equi-join on `key`). Self matches are excluded;
+    ranks break cosine ties by corpus id."""
     # Norms are per-row invariants: fold them ONCE on each side before
     # the pair expansion (the interpreted HOF fold then runs once per
     # row + once per pair, not three times per pair — same left-to-right
     # double math, bit-identical cosines).
     q = queries.select(
-        F.col(query_id).alias("qid"),
-        F.col(vec_col).alias("qv"),
+        F.col(query_id).alias("qid"), F.col(vec_col).alias("qv"),
         norm(F.col(vec_col)).alias("qn"),
+        *([F.explode(q_keys).alias(key)] if key else []),
     )
     c = corpus.select(
-        F.col(corpus_id).alias("cid"),
-        F.col(vec_col).alias("cv"),
+        F.col(corpus_id).alias("cid"), F.col(vec_col).alias("cv"),
         norm(F.col(vec_col)).alias("cn"),
+        *([c_key.alias(key)] if key else []),
     )
+    pairs = c.join(F.broadcast(q), key) if key else c.crossJoin(F.broadcast(q))
     scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("cid") != F.col("qid"))
+        pairs.filter(F.col("cid") != F.col("qid"))
         .withColumn(
             "cos", safe_cos(dot(F.col("qv"), F.col("cv")), F.col("qn"), F.col("cn"))
         )
@@ -133,29 +154,9 @@ def lsh_topk(
             qb.bitwiseXOR(F.lit((1 << i) | (1 << j)))
             for i in range(planes) for j in range(i + 1, planes)
         ]
-    q = queries.select(
-        F.col(query_id).alias("qid"), F.col(vec_col).alias("qv"),
-        norm(F.col(vec_col)).alias("qn"),
-        F.explode(F.array(*probes)).alias("bucket"),
-    )
-    c = corpus.select(
-        F.col(corpus_id).alias("cid"), F.col(vec_col).alias("cv"),
-        norm(F.col(vec_col)).alias("cn"),
-        hyperplane_bucket(F.col(vec_col), pl).alias("bucket"),
-    )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("cid") != F.col("qid"))
-        .withColumn(
-            "cos", safe_cos(dot(F.col("qv"), F.col("cv")), F.col("qn"), F.col("cn"))
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.col("cid"))
-    return (
-        scored.filter(F.col("cos").isNotNull())  # zero-norm rows: no rank
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "cid", "cos", "rnk")
+    return _cosine_topk(
+        queries, corpus, query_id, corpus_id, vec_col, k, "bucket",
+        F.array(*probes), hyperplane_bucket(F.col(vec_col), pl),
     )
 
 
@@ -226,29 +227,10 @@ def ivf_topk(
     is written partitioned by `cell` and probes prune to nprobe/n_centroids
     of the data."""
     cent = learn_centroids(corpus, corpus_id, vec_col, n_centroids)
-    c = corpus.select(
-        F.col(corpus_id).alias("cid"), F.col(vec_col).alias("cv"),
-        norm(F.col(vec_col)).alias("cn"),
-        ivf_assign(F.col(vec_col), cent, 1)[0].alias("cell"),
-    )
-    q = queries.select(
-        F.col(query_id).alias("qid"), F.col(vec_col).alias("qv"),
-        norm(F.col(vec_col)).alias("qn"),
-        F.explode(ivf_assign(F.col(vec_col), cent, nprobe)).alias("cell"),
-    )
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col("cid") != F.col("qid"))
-        .withColumn(
-            "cos", safe_cos(dot(F.col("qv"), F.col("cv")), F.col("qn"), F.col("cn"))
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.col("cid"))
-    return (
-        scored.filter(F.col("cos").isNotNull())  # zero-norm rows: no rank
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "cid", "cos", "rnk")
+    return _cosine_topk(
+        queries, corpus, query_id, corpus_id, vec_col, k, "cell",
+        ivf_assign(F.col(vec_col), cent, nprobe),
+        ivf_assign(F.col(vec_col), cent, 1)[0],
     )
 
 

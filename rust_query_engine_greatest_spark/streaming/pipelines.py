@@ -49,20 +49,24 @@ def _events_schema(sf_dir: str) -> tuple[T.StructType, bool]:
     return schema, ts_is_long
 
 
-def _stage_dir(sf_dir: str) -> str:
+def _stage_events(sf_dir: str, name: str, copies: int) -> str:
     """Spark's file stream source requires a *directory*; TESTDATA ships
-    one parquet file per table in a read-only tree. Stage a symlink
-    directory under the repo (gitignored) — zero-copy, and exactly how a
+    one parquet file per table in a read-only tree. Stage a directory of
+    `copies` symlinks to the events file under the system temp dir —
+    zero-copy, never inside the source checkout, and exactly how a
     production deployment points the source at a landing directory."""
     import hashlib
     import os
+    import tempfile
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    d = f"/root/repo/.stream_stage/{tag}/events"
+    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
+    tag = hashlib.md5(src.encode()).hexdigest()[:8]
+    d = os.path.join(tempfile.gettempdir(), "spark-graft-stream-stage", tag, name)
     os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "part-00000.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, "events.parquet"), link)
+    for i in range(copies):
+        link = os.path.join(d, f"part-{i:05d}.parquet")
+        if not os.path.lexists(link):
+            os.symlink(src, link)
     return d
 
 
@@ -73,7 +77,8 @@ def read_events_stream(spark: SparkSession, sf_dir: str, duplicated: bool = Fals
     duplicated=True the source delivers every event twice
     (at-least-once fixture for stream_dedup)."""
     schema, ts_is_long = _events_schema(sf_dir)
-    src = stage_events_duplicated(sf_dir) if duplicated else _stage_dir(sf_dir)
+    src = (stage_events_duplicated(sf_dir) if duplicated
+           else _stage_events(sf_dir, "events", 1))
     raw = spark.readStream.schema(schema).parquet(src)
     if ts_is_long:
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
@@ -283,18 +288,7 @@ def stage_events_duplicated(sf_dir: str) -> str:
     """A stream-source dir that delivers every event TWICE (two links to
     the same parquet) — the at-least-once-delivery fixture the dedup
     operator exists for."""
-    import hashlib
-    import os
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    d = f"/root/repo/.stream_stage/{tag}/events_dup"
-    os.makedirs(d, exist_ok=True)
-    src = os.path.join(sf_dir, "events.parquet")
-    for name in ("part-00000.parquet", "part-00001.parquet"):
-        link = os.path.join(d, name)
-        if not os.path.exists(link):
-            os.symlink(src, link)
-    return d
+    return _stage_events(sf_dir, "events_dup", 2)
 
 
 def run_foreach_batch(

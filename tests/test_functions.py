@@ -327,6 +327,14 @@ def test_run_greatest_nan_wins_and_float_coercion(spark):
     assert math.isnan(out[0]) and out[1] == 2.0 and isinstance(out[1], float)
 
 
+def test_run_greatest_mixed_int_float_column(spark):
+    """A column holding both Python ints and floats is DoubleType; its
+    ints must be widened before they reach createDataFrame."""
+    from rust_query_engine_greatest_spark.functions.api import run_greatest
+
+    assert run_greatest([[1, 2.5, None], [3, 1, None]], spark) == [3.0, 2.5, None]
+
+
 def test_run_greatest_bool_numeric_widens_to_int(spark):
     from rust_query_engine_greatest_spark.functions.api import run_greatest
 

@@ -191,3 +191,20 @@ def test_index_probe_stream_equals_batch_across_micro_batches(spark, sf_dir):
     assert n_batches >= 3
     got = {(r.batch_id, r.corpus_id, r.hamming) for r in streamed.collect()}
     assert got == twin and len(twin) > 0
+
+
+def test_stream_stage_dir_outside_checkout(sf_dir):
+    """The file stream source's staging dirs live under the system temp
+    dir, never inside the source checkout, and link to the events file."""
+    import os
+
+    from rust_query_engine_greatest_spark.streaming import pipelines
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    events = os.path.realpath(os.path.join(sf_dir, "events.parquet"))
+    for d, n in ((pipelines._stage_events(sf_dir, "events", 1), 1),
+                 (pipelines.stage_events_duplicated(sf_dir), 2)):
+        assert os.path.commonpath([repo, os.path.realpath(d)]) != repo, d
+        parts = sorted(os.listdir(d))
+        assert len(parts) == n
+        assert all(os.path.realpath(os.path.join(d, p)) == events for p in parts)
