@@ -21,8 +21,8 @@ a hand-maintained ordering going stale):
 3. green / no_oracle entries, stalest round first (re-verification
    rotates through the back catalog).
 
-The static r5 lists below are the fallback when no CORRECTNESS file is
-readable (fresh checkout).
+With no CORRECTNESS file readable (fresh checkout) every entry falls in
+group 2, so the order is the never-checked priority order alone.
 """
 
 from __future__ import annotations
@@ -32,99 +32,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from rust_query_engine_greatest_spark.queries import REGISTRY
-
-# Cumulative green rows across CORRECTNESS_r01-r04 (134 entries:
-# rows+schema+hash match, no err). Re-check these last.
-_DRIVER_GREEN = frozenset({
-    "tpch_q1", "tpch_q2", "tpch_q3", "tpch_q4", "tpch_q5", "tpch_q6",
-    "tpch_q7", "tpch_q8", "tpch_q9", "tpch_q10", "tpch_q11", "tpch_q12",
-    "tpch_q13", "tpch_q14", "tpch_q15", "tpch_q16", "tpch_q17", "tpch_q18",
-    "tpch_q19", "tpch_q20", "tpch_q21", "tpch_q22",
-    "join_inner", "join_left", "join_right", "join_full", "join_left_semi",
-    "join_left_anti", "join_right_semi", "join_right_anti", "join_cross",
-    "join_theta", "join_range", "join_asof", "join_null_safe",
-    "agg_registry", "agg_stats", "agg_rollup", "agg_cube",
-    "agg_grouping_sets", "agg_array_collect", "agg_salted_two_phase",
-    "agg_percentile_exact", "agg_empty_input",
-    "window_ranking", "window_analytic", "window_frames",
-    "window_time_range", "window_groups_frame", "window_null_edge",
-    "sort_limit_offset", "sort_multikey_nulls", "topk_per_group",
-    "setop_union_all", "setop_union_distinct", "setop_intersect",
-    "setop_except", "setop_intersect_all", "setop_except_all",
-    "distinct_on", "values_inline", "empty_relation", "placeholder_row",
-    "unnest_tokens", "unnest_outer", "pivot_status", "unpivot_measures",
-    "recursive_cte",
-    "greatest_numeric", "greatest_string_temporal", "greatest_coercion",
-    "greatest_nan", "greatest_allnull",
-    "func_string_suite", "func_math_suite", "func_datetime_suite",
-    "func_conditional_suite", "func_regex_suite",
-    "func_string_suite2", "func_math_suite2", "func_datetime_suite2",
-    "func_string_edge", "func_math_edge", "func_datetime_edge",
-    "func_null_edge", "func_cast_edge",
-    "udx_generate_series",
-    "events_daily_type", "events_funnel", "events_json_extract",
-    "events_sessionize_batch", "events_time_bucket", "events_top_users",
-    "stream_window_counts", "stream_stream_join", "stream_sessionize",
-    "stream_dedup",
-    "source_csv_roundtrip", "source_ndjson_roundtrip",
-    "source_avro_roundtrip", "source_arrow_roundtrip",
-    "source_memory_table", "sink_parquet_roundtrip",
-    "dedup_exact", "dedup_jaccard", "dedup_embedding",
-    "dedup_minhash", "dedup_simhash",
-    "sim_topk_bruteforce", "sim_topk_lsh", "sim_topk_ivf",
-    "text_langid", "text_quality", "text_fingerprint",
-    "text_decontaminate", "text_redact_pii", "text_hash_sample",
-    "multimodal_decode_stats",
-    "cb_count_distinct_global", "cb_like_search", "cb_multi_group_rollup",
-    "cb_point_lookup", "cb_regex_extract_key",
-    "cb_empty_result", "cb_topn_offset", "cb_quantiles", "cb_wide_sums",
-    "cb_minute_series", "cb_len_stats_having", "cb_case_carved_key",
-    "job_star_min", "job_like_or_chain",
-    "h2o_groupby_highcard", "h2o_join_bigsmall",
-})
-
-# r4 non-green rows with landed fixes, verified first this round:
-# 8x unhashable array/binary output columns now projected to primitive
-# CSV/length columns (queries/functions_q.py, queries/pipeline_q.py)
-# and 1x oracle HUGEINT skew now CAST(SUM(..) AS BIGINT) + sign-aware
-# half-away rounding in the pandas kernel (functions/udx.py:79).
-_R4_FIXED = (
-    "func_crypto_encoding", "func_array_suite", "func_map_suite",
-    "func_array_suite2", "func_sql_dialect", "func_array_edge",
-    "multimodal_features", "text_winnow", "udx_grouped_agg_cents",
-)
-
-# The 48 entries with no driver CORRECTNESS row after r01-r04 (all were
-# added in r4 below that round's 50-slot prefix), pinned explicitly and
-# priority-ordered; 9 + 48 = 57 > 50, so the last ~7 spill to round 6.
-_NEVER_CHECKED = (
-    # subquery decorrelation (7)
-    "subq_scalar_uncorrelated", "subq_scalar_correlated", "subq_in_semi",
-    "subq_not_in_null_aware", "subq_exists_correlated", "subq_lateral_topk",
-    "subq_quantified_all_any",
-    # sources (4)
-    "source_path_query", "source_object_store_scan",
-    "source_schema_evolution", "source_prepared_params",
-    # relational edge pins (11)
-    "unnest_zip", "join_outer_frame_edge", "window_empty_frame_edge",
-    "window_range_null_peers", "agg_decimal_wide", "agg_multi_distinct",
-    "agg_float_special_keys", "join_float_special_keys",
-    "agg_approx_bounds", "setop_coercion_edge", "func_interval_edge",
-    # pipeline / curation (13)
-    "dedup_components", "dedup_keep_canonical", "text_repetition",
-    "text_span_dedup", "text_pack_sequences", "text_stratified_sample",
-    "text_mixture_epochs", "text_c4_line_filter", "events_gapfill",
-    "events_interpolate", "multimodal_resize_sums",
-    "multimodal_frame_sample", "pipeline_curate_end_to_end",
-    # streaming (2)
-    "stream_session_window", "stream_static_join",
-    # harness tail (11) - the last ~7 are the expected r6 spillover
-    "h2o_top2_per_group", "h2o_corr_r2", "h2o_groupby_allkeys",
-    "h2o_join_string", "h2o_join_medium", "cb_global_minmax_avg",
-    "cb_in_list_date_group", "cb_arith_group_keys",
-    "cb_regex_replace_domain", "cb_select_star_topk",
-    "cb_bare_sort_project",
-)
 
 
 def _driver_rows() -> dict[str, tuple[int, bool, str | None]]:
@@ -165,12 +72,7 @@ def _driver_rows() -> dict[str, tuple[int, bool, str | None]]:
 
 def _ordered_names() -> list[str]:
     rows = _driver_rows()
-    if not rows:  # fresh checkout — static r5 snapshot ordering
-        prefix = [n for n in _R4_FIXED + _NEVER_CHECKED if n in REGISTRY]
-        placed = set(prefix) | _DRIVER_GREEN
-        rest = [n for n in REGISTRY if n not in placed]
-        green = [n for n in REGISTRY if n in _DRIVER_GREEN]
-        return prefix + rest + green
+
     def _rows_only_by_design(n: str) -> bool:
         # a latest-round no_oracle row is only "done" while the registry
         # entry still HAS no oracle; once an oracle lands (r6:

@@ -4,12 +4,13 @@ it back through the matching scan, and aggregates — the oracle runs the
 same aggregate on the original parquet, so a format that loses rows,
 types, or values hash-mismatches.
 
-Round-trip staging goes under spark-warehouse/ (repo scratch, never the
-read-only TESTDATA)."""
+Round-trip staging goes under the system temp dir (never the source
+checkout or the read-only TESTDATA)."""
 
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -18,8 +19,8 @@ from ..sources import readers, writers
 from ..sources.catalog import load_table
 from .base import dec2, dsum, register
 
-_STAGE = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                      "..", "..", "spark-warehouse", "roundtrip")
+_STAGE = os.path.join(tempfile.gettempdir(), "spark-graft-warehouse",
+                      "roundtrip")
 
 # the shared aggregate both sides compute (order-insensitive, decimal-exact)
 _ORACLE_AGG = """

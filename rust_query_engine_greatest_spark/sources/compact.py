@@ -17,14 +17,16 @@ min/max stats prune date-predicate scans (the reference's
 row-group/page pruning analog, `core/src/datasource/physical_plan/
 parquet/row_group_filter.rs`).
 
-The rewrite happens once per sf_dir, is cached under spark-warehouse/,
-and is activated explicitly (bench.py) — the correctness gate keeps
-reading the driver's original files.
+The rewrite happens once per sf_dir, is cached under the system temp
+dir (never inside the source checkout), and is activated explicitly
+(bench.py) — the correctness gate keeps reading the driver's original
+files.
 """
 
 from __future__ import annotations
 
 import os
+import tempfile
 import time
 
 from pyspark.sql import SparkSession
@@ -54,8 +56,8 @@ _ACTIVE: dict[str, str] = {}
 
 def _dest_root(sf_dir: str) -> str:
     tag = os.path.basename(sf_dir.rstrip("/")) or "data"
-    return os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "..", "..", "spark-warehouse", "compacted", tag)
+    return os.path.join(tempfile.gettempdir(), "spark-graft-warehouse",
+                        "compacted", tag)
 
 
 def compact_tables(spark: SparkSession, sf_dir: str,
@@ -80,11 +82,12 @@ def compact_tables(spark: SparkSession, sf_dir: str,
     return dest, round(time.perf_counter() - t0, 2)
 
 
-def activate(spark: SparkSession, sf_dir: str) -> float:
-    """Compact sf_dir (if not already) and route catalog.load_table for
-    that sf_dir to the compacted copy. Returns compaction seconds (0.0
-    when cached from a previous run)."""
-    dest, secs = compact_tables(spark, sf_dir)
+def activate(spark: SparkSession, sf_dir: str,
+             tables: tuple[str, ...] = TABLES) -> float:
+    """Compact `tables` of sf_dir (if not already) and route
+    catalog.load_table for that sf_dir to the compacted copy. Returns
+    compaction seconds (0.0 when cached from a previous run)."""
+    dest, secs = compact_tables(spark, sf_dir, tables=tables)
     _ACTIVE[os.path.abspath(sf_dir)] = dest
     return secs
 

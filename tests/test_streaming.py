@@ -195,9 +195,13 @@ def test_index_probe_stream_equals_batch_across_micro_batches(spark, sf_dir):
 
 def test_stream_stage_dir_outside_checkout(sf_dir):
     """The file stream source's staging dirs live under the system temp
-    dir, never inside the source checkout, and link to the events file."""
+    dir, never inside the source checkout, and link to the events file;
+    the compaction root and the source round-trip stage are outside the
+    checkout too."""
     import os
 
+    from rust_query_engine_greatest_spark.queries import sources_q
+    from rust_query_engine_greatest_spark.sources import compact
     from rust_query_engine_greatest_spark.streaming import pipelines
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -208,3 +212,5 @@ def test_stream_stage_dir_outside_checkout(sf_dir):
         parts = sorted(os.listdir(d))
         assert len(parts) == n
         assert all(os.path.realpath(os.path.join(d, p)) == events for p in parts)
+    for d in (compact._dest_root(sf_dir), sources_q._STAGE):
+        assert os.path.commonpath([repo, os.path.realpath(d)]) != repo, d

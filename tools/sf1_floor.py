@@ -215,6 +215,7 @@ def main() -> None:
                     help="comma list of qN names (default: all skeletons)")
     args = ap.parse_args()
 
+    from instrument import idle_gate
     from tpch_sf1 import TPCH_TABLES, ensure_sf1
 
     from rust_query_engine_greatest_spark.queries import REGISTRY
@@ -223,14 +224,11 @@ def main() -> None:
 
     ensure_sf1(args.dir)
     spark = get_spark(app_name="sf1-floor")
-    dest, _ = compact.compact_tables(spark, args.dir, tables=TPCH_TABLES)
-    compact._ACTIVE[os.path.abspath(args.dir)] = dest
+    compact.activate(spark, args.dir, tables=TPCH_TABLES)
     # same configuration as the bench of record (r7: stats+CBO default)
     stats.activate(spark, args.dir)
 
-    t_gate = time.time()
-    while os.getloadavg()[0] > 3.0 and time.time() - t_gate < 240:
-        time.sleep(10)
+    idle_gate(3.0, 240.0)
 
     out: dict[str, dict[str, float]] = {}
     skels = _skeletons(spark, args.dir)

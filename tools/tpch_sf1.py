@@ -111,9 +111,7 @@ def main() -> None:
     spark = get_spark(app_name="tpch-sf1")
     prep_s = 0.0
     if args.layout in ("compacted", "bucketed"):
-        dest, prep_s = compact.compact_tables(spark, args.dir,
-                                              tables=TPCH_TABLES)
-        compact._ACTIVE[os.path.abspath(args.dir)] = dest
+        prep_s = compact.activate(spark, args.dir, tables=TPCH_TABLES)
     if args.layout == "bucketed":
         prep_s += bucketing.activate(spark, args.dir, 32)
     if not args.no_stats:
@@ -331,7 +329,7 @@ def run_official(spark, con, args, tracker) -> tuple[dict, dict]:
     # row/NDV statistics through the official texts' bare table names.
     from rust_query_engine_greatest_spark.sources import stats as _stats
 
-    src = compact._ACTIVE.get(os.path.abspath(args.dir), args.dir)
+    src = compact.resolve(args.dir) or args.dir
     for t in ALL_TABLES:
         st = _stats.resolve(args.dir, t)
         if st is not None:
