@@ -20,6 +20,7 @@ plans that survive a 1000-executor / 100 TB deployment:
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -71,6 +72,11 @@ def get_spark(
         # same jobs (pointer bloat + bigger GC regions) on local[32].
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "28g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
+        # catalog tables written by saveAsTable (write_bucketed) land
+        # under the system temp dir, not `spark-warehouse/` in the cwd
+        .config("spark.sql.warehouse.dir", os.path.join(
+            tempfile.gettempdir(), "spark-graft-warehouse", "tables"))
         # Parquet TIMESTAMP(NANOS) (events table) has no Spark type: read
         # the raw int64 nanos and truncate to micros in the source layer
         # (sources/catalog.py) — the documented ns→µs policy (SURVEY

@@ -63,64 +63,3 @@ def bucketed_join(
     bucket counts this plans as an exchange-free sort-merge join —
     asserted in tests/test_sources.py."""
     return spark.table(left_table).join(spark.table(right_table), on=on, how=how)
-
-
-# ---- bench/bucketed-layout routing -----------------------------------------
-# (sf_dir, table) -> bucketed catalog table name; consulted by
-# catalog.load_table the same way compact.resolve is. The keys a TPC-H
-# workload co-locates on: the l_orderkey/o_orderkey join+agg chain
-# (q3/q4/q12/q18/q21 never re-shuffle the fact on that key again).
-_BUCKETED: dict[tuple[str, str], str] = {}
-
-BUCKET_KEYS = {"lineitem": "l_orderkey", "orders": "o_orderkey"}
-
-
-def activate(spark: SparkSession, sf_dir: str, n_buckets: int,
-             tables: tuple[str, ...] = ("lineitem", "orders")) -> float:
-    """Write the given fact tables as sorted bucketed catalog tables
-    (once — idempotent per session/warehouse) and route
-    catalog.load_table(sf_dir, table) to them. Returns seconds spent
-    writing (0.0 when already present). The one-time write is the 100 TB
-    trade: pay the orderkey clustering at ingest, never at query time."""
-    import hashlib
-    import os
-    import time
-
-    from . import catalog
-
-    t0 = time.perf_counter()
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    for name in tables:
-        key = BUCKET_KEYS[name]
-        tbl = f"bkt_{tag}_{name}"
-        if not spark.catalog.tableExists(tbl):
-            write_bucketed(catalog.load_table(spark, sf_dir, name), tbl,
-                           [key], n_buckets, [key])
-        # ANALYZE the bucketed table itself so a stats+CBO session keeps
-        # estimate-driven join order when load_table routes here instead
-        # of to the stat_ twin (bucketed route wins). Runs even when the
-        # table pre-exists: a bucketed table persisted in the warehouse
-        # by an EARLIER session satisfies tableExists with no column
-        # stats, and skipping the (cheap, idempotent) ANALYZE would
-        # silently strip CBO from every query routed to it.
-        from .stats import _statable_columns
-
-        spark.sql(f"ANALYZE TABLE {tbl} COMPUTE STATISTICS "
-                  f"FOR COLUMNS {_statable_columns(spark, tbl)}")
-        _BUCKETED[(os.path.abspath(sf_dir), name)] = tbl
-    return round(time.perf_counter() - t0, 2)
-
-
-def deactivate(sf_dir: str | None = None) -> None:
-    import os
-
-    for k in [k for k in _BUCKETED
-              if sf_dir is None or k[0] == os.path.abspath(sf_dir)]:
-        _BUCKETED.pop(k)
-
-
-def resolve(sf_dir: str, name: str) -> str | None:
-    """Bucketed catalog table for (sf_dir, table) if activated."""
-    import os
-
-    return _BUCKETED.get((os.path.abspath(sf_dir), name))

@@ -5,6 +5,16 @@ Reference parity: `ListingTable` + `TableProvider`
 in Spark this is `spark.read.parquet` with built-in projection/predicate
 pushdown and partition discovery; nothing custom is needed (SURVEY §2.1).
 
+Routing: which physical copy answers `load_table(sf_dir, name)` is
+decided here and only here, from one map (abs sf_dir, table) → `Route`.
+A route records the parquet path (the compacted copy once
+`compact.activate` rewrote it), the ANALYZEd `stat_` catalog table over
+that path (`stats.activate`) and the columnar cached copy
+(`cache_tables`). `load_table` serves the cached copy first, then the
+catalog table, then the path; a table with no route is read from
+`{sf_dir}/{name}.parquet`. `reset` drops the routes of one directory or
+of all.
+
 Scale note: at 100 TB each logical table is a directory of many parquet
 files (hive-partitioned by date or key); `load_table` takes any path
 glob the same way. Filters and column pruning reach the scan via
@@ -14,6 +24,7 @@ Catalyst — verified in plans/explain.py assertions.
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -30,12 +41,53 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# (sf_dir, table) -> cached DataFrame; MemTable/MemoryExec analog
-# (SURVEY §2.1, core/src/datasource/memory.rs). Populated by
-# cache_tables(), consulted by load_table().
-_MEMORY: dict[tuple[str, str], "DataFrame"] = {}
+@dataclass
+class Route:
+    """Physical copy behind one (sf_dir, table)."""
+
+    path: str  # parquet file or directory
+    stat: str | None = None  # ANALYZEd catalog table over `path`
+    mem: DataFrame | None = None  # cached copy; MemTable analog
+
+
+_ROUTES: dict[tuple[str, str], Route] = {}
+
+
+def route(sf_dir: str, name: str) -> Route | None:
+    """The route registered for (sf_dir, table), if any."""
+    return _ROUTES.get((os.path.abspath(sf_dir), name))
+
+
+def register(sf_dir: str, name: str, **fields) -> Route:
+    """Set `fields` (path, stat, mem) on the route for (sf_dir, table),
+    creating it over the raw `{sf_dir}/{name}.parquet` if absent."""
+    key = (os.path.abspath(sf_dir), name)
+    r = _ROUTES.setdefault(key, Route(os.path.join(key[0], f"{name}.parquet")))
+    for k, v in fields.items():
+        setattr(r, k, v)
+    return r
+
+
+def reset(spark: SparkSession, sf_dir: str | None = None) -> None:
+    """Drop the routes of sf_dir (all directories when None) and
+    unpersist their cached copies, so reads go back to the raw files.
+    The CBO confs are session-wide: they are unset only once no stats
+    route remains for any directory. Catalog tables are left in place
+    (metadata only)."""
+    from .stats import CBO_CONFS
+
+    for key in [k for k in _ROUTES
+                if sf_dir is None or k[0] == os.path.abspath(sf_dir)]:
+        r = _ROUTES.pop(key)
+        if r.mem is not None:
+            r.mem.unpersist()
+    if not any(r.stat for r in _ROUTES.values()):
+        for conf in CBO_CONFS:
+            try:
+                spark.conf.unset(conf)
+            except Exception:
+                pass
 
 
 def cache_tables(spark: SparkSession, sf_dir: str,
@@ -49,8 +101,7 @@ def cache_tables(spark: SparkSession, sf_dir: str,
     downstream stage to one task."""
     parallelism = parallelism or spark.sparkContext.defaultParallelism
     for name in tables:
-        key = (os.path.abspath(sf_dir), name)
-        if key in _MEMORY:
+        if getattr(route(sf_dir, name), "mem", None) is not None:
             continue
         df = load_table(spark, sf_dir, name)
         if df.rdd.getNumPartitions() < parallelism and name in (
@@ -58,12 +109,14 @@ def cache_tables(spark: SparkSession, sf_dir: str,
             df = df.repartition(parallelism)
         df = df.cache()
         df.count()  # materialize now so queries measure compute, not load
-        _MEMORY[key] = df
+        register(sf_dir, name, mem=df)
 
 
 def uncache_tables(sf_dir: str | None = None) -> None:
-    for key in [k for k in _MEMORY if sf_dir is None or k[0] == os.path.abspath(sf_dir)]:
-        _MEMORY.pop(key).unpersist()
+    for (d, _), r in _ROUTES.items():
+        if r.mem is not None and (sf_dir is None or d == os.path.abspath(sf_dir)):
+            r.mem.unpersist()
+            r.mem = None
 
 
 def _ensure_session_confs(spark: SparkSession) -> None:
@@ -91,36 +144,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     this layer truncates ts_µs = ts_ns DIV 1000 — matching DuckDB's
     implicit behavior on the oracle side. When the generator writes
     timestamp[us] directly (current TESTDATA), no conversion is needed;
-    the check is on the scanned type, not an assumption about the file.
+    the check is on the scanned type, not an assumption about the file
+    (a compacted copy is written post-conversion, so it passes as is).
     """
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from . import bucketing, compact, stats
-
     _ensure_session_confs(spark)
-    mem = _MEMORY.get((os.path.abspath(sf_dir), name))
-    if mem is not None:
-        return mem
-    # Bucketed route FIRST: a bucketed layout is an explicit physical
-    # request (exchange-free orderkey joins) that a stats-routed read of
-    # the same table would silently bypass; bucketing.activate ANALYZEs
-    # the bucketed table itself, so CBO estimates still apply to it.
-    bkt = bucketing.resolve(sf_dir, name)
-    if bkt is not None:
-        # sorted bucketed catalog table: orderkey joins/aggs satisfy
-        # their ClusteredDistribution straight off the scan
-        return spark.table(bkt)
-    st = stats.resolve(sf_dir, name)
-    if st is not None:
+    r = route(sf_dir, name)
+    if r is None:
+        path = os.path.join(sf_dir, f"{name}.parquet")
+    elif r.mem is not None:
+        return r.mem
+    elif r.stat is not None:
         # stats-backed catalog table: same files, plus row-count/NDV
         # statistics so CBO join reorder & estimation apply (stats.py)
-        return spark.table(st)
-    root = compact.resolve(sf_dir)
-    if root is not None:
-        # compacted copies are written post-conversion (ts already µs)
-        return spark.read.parquet(os.path.join(root, f"{name}.parquet"))
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        return spark.table(r.stat)
+    else:
+        path = r.path
+    df = spark.read.parquet(path)
     if name == "events":
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, T.LongType):

@@ -31,7 +31,7 @@ import time
 
 from pyspark.sql import SparkSession
 
-from .catalog import TABLES, load_table
+from . import catalog
 
 # Local[32] tuning, measured (interleaved A/B over the bench suite at
 # sf0.1): 150k rows/file beat 20k and 75k — per-task scheduling overhead
@@ -50,10 +50,6 @@ CLUSTER_COL = {
     "events": "ts",
 }
 
-# sf_dir -> compacted root; consulted by catalog.load_table.
-_ACTIVE: dict[str, str] = {}
-
-
 def _dest_root(sf_dir: str) -> str:
     tag = os.path.basename(sf_dir.rstrip("/")) or "data"
     return os.path.join(tempfile.gettempdir(), "spark-graft-warehouse",
@@ -61,7 +57,7 @@ def _dest_root(sf_dir: str) -> str:
 
 
 def compact_tables(spark: SparkSession, sf_dir: str,
-                   tables: tuple[str, ...] = TABLES) -> tuple[str, float]:
+                   tables: tuple[str, ...] = catalog.TABLES) -> tuple[str, float]:
     """Rewrite each table into a multi-file, range-clustered parquet
     directory (idempotent: skips tables already compacted). Returns
     (dest_root, seconds_spent)."""
@@ -71,7 +67,7 @@ def compact_tables(spark: SparkSession, sf_dir: str,
         dst = os.path.join(dest, f"{name}.parquet")
         if os.path.exists(os.path.join(dst, "_SUCCESS")):
             continue
-        df = load_table(spark, sf_dir, name)
+        df = catalog.load_table(spark, sf_dir, name)
         nfiles = int(max(1, min(MAX_FILES, df.count() // ROWS_PER_FILE)))
         key = CLUSTER_COL.get(name)
         if key and nfiles > 1:
@@ -83,22 +79,11 @@ def compact_tables(spark: SparkSession, sf_dir: str,
 
 
 def activate(spark: SparkSession, sf_dir: str,
-             tables: tuple[str, ...] = TABLES) -> float:
+             tables: tuple[str, ...] = catalog.TABLES) -> float:
     """Compact `tables` of sf_dir (if not already) and route
-    catalog.load_table for that sf_dir to the compacted copy. Returns
+    catalog.load_table for each of them to its compacted copy. Returns
     compaction seconds (0.0 when cached from a previous run)."""
     dest, secs = compact_tables(spark, sf_dir, tables=tables)
-    _ACTIVE[os.path.abspath(sf_dir)] = dest
+    for name in tables:
+        catalog.register(sf_dir, name, path=os.path.join(dest, f"{name}.parquet"))
     return secs
-
-
-def deactivate(sf_dir: str | None = None) -> None:
-    if sf_dir is None:
-        _ACTIVE.clear()
-    else:
-        _ACTIVE.pop(os.path.abspath(sf_dir), None)
-
-
-def resolve(sf_dir: str) -> str | None:
-    """Compacted root for sf_dir if activated, else None."""
-    return _ACTIVE.get(os.path.abspath(sf_dir))

@@ -31,13 +31,7 @@ import time
 
 from pyspark.sql import SparkSession
 
-# (abs sf_dir, table) -> catalog table name, consulted by
-# catalog.load_table the same way bucketing._BUCKETED is.
-_STATS: dict[tuple[str, str], str] = {}
-# stat_ tables superseded by a re-activation (raw -> compacted changes
-# the path tag, so the old table falls out of _STATS silently); kept so
-# deactivate(drop=True) can still drop their catalog metadata.
-_SUPERSEDED: list[str] = []
+from . import catalog
 
 CBO_CONFS = {
     "spark.sql.cbo.enabled": "true",
@@ -52,9 +46,10 @@ TPCH_TABLES = ("region", "nation", "customer", "supplier", "part",
 def activate(spark: SparkSession, sf_dir: str,
              tables: tuple[str, ...] = TPCH_TABLES,
              extra_paths: dict[str, str] | None = None) -> float:
-    """Register `{sf_dir}/{t}.parquet` (the compacted copy when one is
-    active) as external catalog tables with full column statistics and
-    turn on CBO for the session. Idempotent; returns seconds spent
+    """Register each table's routed parquet (`{sf_dir}/{t}.parquet`, or
+    the compacted copy once compact.activate ran) as an external catalog
+    table with full column statistics, route catalog.load_table to it
+    and turn on CBO for the session. Idempotent; returns seconds spent
     analyzing (0.0 when already present).
 
     `extra_paths` maps extra table names to explicit parquet paths
@@ -64,18 +59,16 @@ def activate(spark: SparkSession, sf_dir: str,
     can carry TIMESTAMP(NANOS) which needs catalog.load_table's ns->us
     conversion, and a catalog table would bypass it.
     """
-    from . import compact
-
     t0 = time.perf_counter()
     for k, v in CBO_CONFS.items():
         spark.conf.set(k, v)
-    root = compact.resolve(sf_dir) or sf_dir
-    paths = {t: os.path.join(root, f"{t}.parquet") for t in tables}
-    for t, p in (extra_paths or {}).items():
-        paths[t] = p
+    paths = {}
+    for t in tables:
+        r = catalog.route(sf_dir, t)
+        paths[t] = r.path if r else os.path.join(sf_dir, f"{t}.parquet")
+    paths.update(extra_paths or {})
     for name, path in paths.items():
-        key = (os.path.abspath(sf_dir), name)
-        # Tag folds the RESOLVED path, not just sf_dir: compaction
+        # Tag folds the ROUTED path, not just sf_dir: compaction
         # activated after a first stats pass changes the path, and the
         # stale stat_ table (pointing at the raw root) must not satisfy
         # the tableExists idempotency check for the compacted one.
@@ -85,14 +78,8 @@ def activate(spark: SparkSession, sf_dir: str,
             spark.sql(f"CREATE TABLE {tbl} USING parquet LOCATION '{path}'")
             spark.sql(f"ANALYZE TABLE {tbl} COMPUTE STATISTICS "
                       f"FOR COLUMNS {_statable_columns(spark, tbl)}")
-        prev = _STATS.get(key)
-        if prev is not None and prev != tbl:
-            _SUPERSEDED.append(prev)
-        _STATS[key] = tbl
+        catalog.register(sf_dir, name, path=path, stat=tbl)
     return round(time.perf_counter() - t0, 2)
-
-
-PIPELINE_TABLES = ("documents", "embeddings", "events")
 
 
 def activate_pipeline(spark: SparkSession, sf_dir: str) -> float:
@@ -104,14 +91,13 @@ def activate_pipeline(spark: SparkSession, sf_dir: str) -> float:
     schema matches what catalog.load_table's raw-read branch produces;
     the raw file may be TIMESTAMP(NANOS)/NTZ and would bypass the
     conversion. Returns seconds spent analyzing."""
-    from . import compact
     from pyspark.sql import types as T
 
     tables = ["documents", "embeddings"]
-    root = compact.resolve(sf_dir)
-    if root is not None:
-        ts_type = spark.read.parquet(
-            os.path.join(root, "events.parquet")).schema["ts"].dataType
+    r = catalog.route(sf_dir, "events")
+    raw = os.path.join(os.path.abspath(sf_dir), "events.parquet")
+    if r is not None and os.path.abspath(r.path) != raw:
+        ts_type = spark.read.parquet(r.path).schema["ts"].dataType
         if isinstance(ts_type, T.TimestampType):
             tables.append("events")
     return activate(spark, sf_dir, tables=tuple(tables))
@@ -131,38 +117,3 @@ def _statable_columns(spark: SparkSession, tbl: str) -> str:
             if not isinstance(f.dataType, (T.TimestampNTZType, T.ArrayType,
                                            T.MapType, T.StructType))]
     return ", ".join(cols)
-
-
-def deactivate(sf_dir: str | None = None, spark: SparkSession | None = None,
-               drop: bool = False) -> None:
-    """Stop routing reads to the stat_ tables. With `spark` given, also
-    restore the CBO confs to Spark defaults — but ONLY once no other
-    sf_dir's routing remains active (CBO confs are session-wide; a
-    deactivate scoped to one sf_dir must not strip estimation from
-    another sf_dir's still-routed tables). With `drop=True`, drop the
-    catalog tables themselves — including any superseded by a
-    raw->compacted re-activation — (metadata only; LOCATION-backed
-    external parquet is never deleted). Default keeps the r7 behavior
-    (routing only) so a shared session's other users keep their
-    tables."""
-    dropped = []
-    for k in [k for k in _STATS
-              if sf_dir is None or k[0] == os.path.abspath(sf_dir)]:
-        dropped.append(_STATS.pop(k))
-    if spark is not None:
-        if not _STATS:
-            for conf in CBO_CONFS:
-                try:
-                    spark.conf.unset(conf)
-                except Exception:
-                    pass
-        if drop:
-            dropped.extend(_SUPERSEDED)
-            _SUPERSEDED.clear()
-            for tbl in dropped:
-                spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-
-
-def resolve(sf_dir: str, name: str) -> str | None:
-    """Stats-backed catalog table for (sf_dir, table) if activated."""
-    return _STATS.get((os.path.abspath(sf_dir), name))

@@ -10,9 +10,11 @@ real files in the repo root.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entry  # noqa: E402
 from rust_query_engine_greatest_spark.queries import REGISTRY  # noqa: E402
@@ -111,7 +113,7 @@ def test_emulator_norm_is_driver_asymmetric_on_decimal():
     an emulator that coerced both sides."""
     import decimal
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(REPO, "tools"))
     from driver_emulator import norm_cell, value_hash
 
     d = decimal.Decimal("3.50")

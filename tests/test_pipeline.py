@@ -472,7 +472,7 @@ def test_simhash_max_bucket_pair_array_bound(spark):
     """VERDICT r7 #6: the executor-memory bound that matters before
     anyone raises max_bucket at 100 TB. A bucket at EXACTLY the default
     max_bucket=1024 members pushes C(1024,2) = 523,776 pair-structs
-    through a SINGLE aggregated row in _bucket_pairs_hamming (the
+    through a SINGLE aggregated row in _bucket_pairs (the
     collect_set → flatten/transform path, pipeline/dedup.py). Fixture:
     1024 docs with IDENTICAL fingerprints (every band bucket holds
     exactly 1024 = max_bucket, so the main path — not sub-banding —

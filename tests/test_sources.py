@@ -172,10 +172,10 @@ def test_compacted_layout_preserves_results(spark, sf_dir):
         # layout really is multi-file for the big table at this sf, or a
         # single file at tiny sf — either way the directory exists
         import os
-        root = compact.resolve(sf_dir)
-        assert root and os.path.exists(os.path.join(root, "lineitem.parquet", "_SUCCESS"))
+        r = catalog.route(sf_dir, "lineitem")
+        assert r and os.path.exists(os.path.join(r.path, "_SUCCESS"))
     finally:
-        compact.deactivate()
+        catalog.reset(spark)
 
 
 def test_object_store_conf_and_gating(spark):
@@ -468,41 +468,6 @@ def test_read_auto_formats(spark, nation, tmp_path_factory):
     (base / "mystery" / "blob.xyz").write_text("x")
     with pytest.raises(ValueError, match="cannot infer"):
         readers.read_auto(spark, str(base / "mystery"))
-
-
-def test_bucketed_layout_route_equal_results_fewer_exchanges(spark, sf_dir):
-    """SPARK_GRAFT_BUCKETS layout (bucketing.activate): load_table
-    routes lineitem/orders to sorted bucketed catalog tables; the
-    orderkey join/agg chain then plans with fewer exchanges and
-    IDENTICAL results (pinned on q18 — whose big-order aggregate and
-    orders join both sit on the bucket key — and q12)."""
-    from rust_query_engine_greatest_spark.plans import count_shuffle_exchanges
-    from rust_query_engine_greatest_spark.queries import REGISTRY
-    from rust_query_engine_greatest_spark.sources import bucketing
-
-    def run(name):
-        df = REGISTRY[name].build(spark, sf_dir)
-        return count_shuffle_exchanges(df), sorted(tuple(r) for r in df.collect())
-
-    base = {n: run(n) for n in ("tpch_q18", "tpch_q12")}
-    secs = bucketing.activate(spark, sf_dir, 4)
-    try:
-        assert bucketing.resolve(sf_dir, "lineitem") is not None
-        for n, (ex0, rows0) in base.items():
-            ex1, rows1 = run(n)
-            assert rows1 == rows0, f"{n}: bucketed results differ"
-            assert ex1 <= ex0, f"{n}: exchanges grew ({ex1} > {ex0})"
-        # q18's big-order aggregate sits ON the bucket key: its
-        # exchange must vanish outright (q12's orderkey join broadcasts
-        # at test SF, so there is no orderkey exchange to remove there)
-        assert run("tpch_q18")[0] < base["tpch_q18"][0]
-    finally:
-        for t in ("lineitem", "orders"):
-            tbl = bucketing.resolve(sf_dir, t)
-            if tbl:
-                spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        bucketing.deactivate(sf_dir)
-    assert secs >= 0.0
 
 
 def _rg_intersecting_files(path, col, lo, hi):

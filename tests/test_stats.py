@@ -3,7 +3,7 @@
 The stats layer is the 100 TB join-order story (ANALYZE once at ingest,
 CBO reorders from row/NDV estimates at any scale), so pin its contract:
 routing through catalog.load_table, statistics actually recorded, CBO
-confs on, and clean deactivation.
+confs on, and a clean catalog.reset.
 """
 
 from __future__ import annotations
@@ -17,11 +17,16 @@ from rust_query_engine_greatest_spark.sources import catalog, stats
 def stats_active(spark, sf_dir):
     prep = stats.activate(spark, sf_dir, tables=("nation", "region", "supplier"))
     yield prep
-    stats.deactivate(sf_dir)
+    catalog.reset(spark, sf_dir)
+
+
+def _stat(sf_dir, name):
+    r = catalog.route(sf_dir, name)
+    return r.stat if r else None
 
 
 def test_activate_routes_load_table_and_sets_cbo(spark, sf_dir, stats_active):
-    tbl = stats.resolve(sf_dir, "nation")
+    tbl = _stat(sf_dir, "nation")
     assert tbl is not None and tbl.startswith("stat_")
     assert spark.conf.get("spark.sql.cbo.enabled") == "true"
     assert spark.conf.get("spark.sql.cbo.joinReorder.enabled") == "true"
@@ -32,7 +37,7 @@ def test_activate_routes_load_table_and_sets_cbo(spark, sf_dir, stats_active):
 
 
 def test_analyze_records_row_counts(spark, sf_dir, stats_active):
-    tbl = stats.resolve(sf_dir, "supplier")
+    tbl = _stat(sf_dir, "supplier")
     desc = {r["col_name"]: r["data_type"]
             for r in spark.sql(f"DESCRIBE TABLE EXTENDED {tbl}").collect()}
     st = desc.get("Statistics", "")
@@ -41,7 +46,7 @@ def test_analyze_records_row_counts(spark, sf_dir, stats_active):
 
 def test_activate_is_idempotent_and_deactivate_restores(spark, sf_dir):
     stats.activate(spark, sf_dir, tables=("region",))
-    first = stats.resolve(sf_dir, "region")
+    first = _stat(sf_dir, "region")
     # second activation must reuse the analyzed table: spy that no
     # CREATE/ANALYZE SQL runs (behavioral, not a wall-clock bound)
     ran = []
@@ -51,11 +56,11 @@ def test_activate_is_idempotent_and_deactivate_restores(spark, sf_dir):
         stats.activate(spark, sf_dir, tables=("region",))
     finally:
         del spark.sql  # restore the bound method
-    assert stats.resolve(sf_dir, "region") == first
+    assert _stat(sf_dir, "region") == first
     assert not [q for q in ran
                 if "ANALYZE" in q.upper() or "CREATE" in q.upper()], ran
-    stats.deactivate(sf_dir)
-    assert stats.resolve(sf_dir, "region") is None
+    catalog.reset(spark, sf_dir)
+    assert catalog.route(sf_dir, "region") is None
     # load_table falls back to the raw parquet read
     df = catalog.load_table(spark, sf_dir, "region")
     assert "stat_" not in df._jdf.queryExecution().analyzed().toString()
@@ -64,68 +69,11 @@ def test_activate_is_idempotent_and_deactivate_restores(spark, sf_dir):
 def test_unactivated_tables_unrouted(spark, sf_dir, stats_active):
     # events is deliberately excluded (ns->us conversion lives in
     # load_table); it must never route through a catalog table
-    assert stats.resolve(sf_dir, "events") is None
-
-
-def test_bucketed_route_wins_over_stats(spark, sf_dir):
-    """ADVICE r7: an explicitly-requested bucketed layout must actually
-    be exercised — load_table routes to the bkt_ table even when a
-    stat_ table exists for the same (sf_dir, table)."""
-    from rust_query_engine_greatest_spark.sources import bucketing
-
-    stats.activate(spark, sf_dir, tables=("orders",))
-    bucketing.activate(spark, sf_dir, 4, tables=("orders",))
-    try:
-        plan = catalog.load_table(spark, sf_dir, "orders") \
-            ._jdf.queryExecution().analyzed().toString()
-        assert "bkt_" in plan and "stat_" not in plan
-        # the bucketed table carries its own ANALYZE stats, so CBO
-        # estimates survive the routing override
-        bkt = bucketing.resolve(sf_dir, "orders")
-        desc = {r["col_name"]: r["data_type"]
-                for r in spark.sql(f"DESCRIBE TABLE EXTENDED {bkt}").collect()}
-        assert "rows" in desc.get("Statistics", "")
-    finally:
-        tbl = bucketing.resolve(sf_dir, "orders")
-        bucketing.deactivate(sf_dir)
-        if tbl:
-            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        stats.deactivate(sf_dir)
-
-
-def test_bucketing_activate_analyzes_preexisting_table(spark, sf_dir):
-    """ADVICE r8: a bucketed table persisted in the warehouse by an
-    EARLIER session satisfies tableExists but carries no column stats;
-    activate must still ANALYZE it (cheap, idempotent) or a stats+CBO
-    session routed to it silently loses estimation."""
-    import hashlib
-    import os
-
-    from rust_query_engine_greatest_spark.sources import bucketing
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    tbl = f"bkt_{tag}_orders"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    try:
-        # simulate the earlier session: bare bucketed write, no ANALYZE
-        bucketing.write_bucketed(
-            catalog.load_table(spark, sf_dir, "orders"), tbl,
-            ["o_orderkey"], 4, ["o_orderkey"])
-        desc = {r["col_name"]: r["data_type"]
-                for r in spark.sql(f"DESCRIBE TABLE EXTENDED {tbl}").collect()}
-        assert "rows" not in desc.get("Statistics", "")
-        bucketing.activate(spark, sf_dir, 4, tables=("orders",))
-        desc = {r["col_name"]: r["data_type"]
-                for r in spark.sql(f"DESCRIBE TABLE EXTENDED {tbl}").collect()}
-        assert "rows" in desc.get("Statistics", ""), \
-            "activate over a pre-existing bucketed table must ANALYZE it"
-    finally:
-        bucketing.deactivate(sf_dir)
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    assert catalog.route(sf_dir, "events") is None
 
 
 def test_scoped_deactivate_keeps_cbo_for_other_dir(spark, sf_dir, tmp_path):
-    """ADVICE r8: deactivate(sf_dir, spark=...) must not unset the
+    """ADVICE r8: catalog.reset(spark, sf_dir) must not unset the
     session-wide CBO confs while ANOTHER sf_dir's stat_ routing is
     still active."""
     import shutil
@@ -136,47 +84,27 @@ def test_scoped_deactivate_keeps_cbo_for_other_dir(spark, sf_dir, tmp_path):
     stats.activate(spark, sf_dir, tables=("region",))
     stats.activate(spark, str(other), tables=("region",))
     try:
-        stats.deactivate(sf_dir, spark=spark)
-        assert stats.resolve(sf_dir, "region") is None
-        assert stats.resolve(str(other), "region") is not None
+        catalog.reset(spark, sf_dir)
+        assert catalog.route(sf_dir, "region") is None
+        assert _stat(str(other), "region") is not None
         assert spark.conf.get("spark.sql.cbo.enabled") == "true", \
             "scoped deactivate stripped CBO from the still-active dir"
-        stats.deactivate(str(other), spark=spark, drop=True)
+        catalog.reset(spark, str(other))
         assert spark.conf.get("spark.sql.cbo.enabled") == "false"
     finally:
-        stats.deactivate(spark=spark, drop=True)
-
-
-def test_deactivate_drop_removes_superseded_tables(spark, sf_dir):
-    """ADVICE r8: after a raw->compacted re-activation the stale
-    raw-path stat_ table is no longer in _STATS; drop=True must still
-    remove it from the catalog."""
-    from rust_query_engine_greatest_spark.sources import compact
-
-    stats.activate(spark, sf_dir, tables=("nation",))
-    raw_tbl = stats.resolve(sf_dir, "nation")
-    compact.activate(spark, sf_dir)
-    try:
-        stats.activate(spark, sf_dir, tables=("nation",))
-        new_tbl = stats.resolve(sf_dir, "nation")
-        assert new_tbl != raw_tbl
-        stats.deactivate(sf_dir, spark=spark, drop=True)
-        assert not spark.catalog.tableExists(new_tbl)
-        assert not spark.catalog.tableExists(raw_tbl), \
-            "superseded raw-path stat_ table left behind by drop=True"
-    finally:
-        compact.deactivate(sf_dir)
-        stats.deactivate(sf_dir, spark=spark, drop=True)
+        catalog.reset(spark)
 
 
 def test_deactivate_with_spark_restores_confs_and_drops(spark, sf_dir):
+    """catalog.reset restores the CBO confs and drops the route; the
+    catalog table itself stays (metadata over the external parquet)."""
     stats.activate(spark, sf_dir, tables=("region",))
-    tbl = stats.resolve(sf_dir, "region")
+    tbl = _stat(sf_dir, "region")
     assert spark.conf.get("spark.sql.cbo.enabled") == "true"
-    stats.deactivate(sf_dir, spark=spark, drop=True)
+    catalog.reset(spark, sf_dir)
     assert spark.conf.get("spark.sql.cbo.enabled") == "false"  # default
-    assert not spark.catalog.tableExists(tbl)
-    assert stats.resolve(sf_dir, "region") is None
+    assert catalog.route(sf_dir, "region") is None
+    assert spark.catalog.tableExists(tbl)
 
 
 def test_activate_pipeline_documents_embeddings_events(spark, sf_dir):
@@ -189,20 +117,19 @@ def test_activate_pipeline_documents_embeddings_events(spark, sf_dir):
 
     stats.activate_pipeline(spark, sf_dir)
     try:
-        assert stats.resolve(sf_dir, "documents") is not None
-        assert stats.resolve(sf_dir, "embeddings") is not None
+        assert _stat(sf_dir, "documents") is not None
+        assert _stat(sf_dir, "embeddings") is not None
         # no compaction -> raw events may be NTZ/ns: never registered
-        assert stats.resolve(sf_dir, "events") is None
+        assert catalog.route(sf_dir, "events") is None
         compact.activate(spark, sf_dir)
         stats.activate_pipeline(spark, sf_dir)
-        ev = stats.resolve(sf_dir, "events")
+        ev = _stat(sf_dir, "events")
         assert ev is not None
         ts_type = catalog.load_table(spark, sf_dir, "events") \
             .schema["ts"].dataType
         assert isinstance(ts_type, T.TimestampType)
     finally:
-        compact.deactivate(sf_dir)
-        stats.deactivate(sf_dir, spark=spark, drop=True)
+        catalog.reset(spark, sf_dir)
 
 
 def test_stats_tag_tracks_compacted_root(spark, sf_dir):
@@ -212,19 +139,18 @@ def test_stats_tag_tracks_compacted_root(spark, sf_dir):
     from rust_query_engine_greatest_spark.sources import compact
 
     stats.activate(spark, sf_dir, tables=("nation",))
-    raw_tbl = stats.resolve(sf_dir, "nation")
+    raw_tbl = _stat(sf_dir, "nation")
     compact.activate(spark, sf_dir)
     try:
         stats.activate(spark, sf_dir, tables=("nation",))
-        new_tbl = stats.resolve(sf_dir, "nation")
+        new_tbl = _stat(sf_dir, "nation")
         assert new_tbl != raw_tbl
         loc = [r["data_type"] for r in
                spark.sql(f"DESCRIBE TABLE EXTENDED {new_tbl}").collect()
                if r["col_name"] == "Location"]
         assert loc and "compacted" in loc[0]
     finally:
-        compact.deactivate(sf_dir)
-        stats.deactivate(sf_dir, spark=spark, drop=True)
+        catalog.reset(spark, sf_dir)
 
 
 def test_ntz_column_stats_matcherror_pin(spark):

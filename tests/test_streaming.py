@@ -193,11 +193,11 @@ def test_index_probe_stream_equals_batch_across_micro_batches(spark, sf_dir):
     assert got == twin and len(twin) > 0
 
 
-def test_stream_stage_dir_outside_checkout(sf_dir):
+def test_stream_stage_dir_outside_checkout(spark, sf_dir):
     """The file stream source's staging dirs live under the system temp
     dir, never inside the source checkout, and link to the events file;
-    the compaction root and the source round-trip stage are outside the
-    checkout too."""
+    the compaction root, the source round-trip stage and the session's
+    warehouse dir are outside the checkout too."""
     import os
 
     from rust_query_engine_greatest_spark.queries import sources_q
@@ -212,5 +212,6 @@ def test_stream_stage_dir_outside_checkout(sf_dir):
         parts = sorted(os.listdir(d))
         assert len(parts) == n
         assert all(os.path.realpath(os.path.join(d, p)) == events for p in parts)
-    for d in (compact._dest_root(sf_dir), sources_q._STAGE):
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    for d in (compact._dest_root(sf_dir), sources_q._STAGE, warehouse):
         assert os.path.commonpath([repo, os.path.realpath(d)]) != repo, d

@@ -5,7 +5,7 @@ number BASELINE.md's standing caveat asks for (the reference's
 published 13.23 s sum is SF1; the driver's per-round bench is sf0.1).
 
 Usage:
-    python tools/tpch_sf1.py [--layout compacted|bucketed|raw]
+    python tools/tpch_sf1.py [--layout compacted|raw]
                              [--dir /tmp/sf1_tpch] [--passes 3]
 
 Outputs one JSON line: per-query best-of-N seconds, the sum, layout,
@@ -34,8 +34,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-TPCH_TABLES = ("region", "nation", "customer", "supplier", "part",
-               "orders", "lineitem")
+from rust_query_engine_greatest_spark.sources.stats import TPCH_TABLES  # noqa: E402
 
 
 def ensure_sf1(dest: str, sf: float = 1.0) -> None:
@@ -54,7 +53,7 @@ def ensure_sf1(dest: str, sf: float = 1.0) -> None:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--layout", default="compacted",
-                    choices=("raw", "compacted", "bucketed"))
+                    choices=("raw", "compacted"))
     ap.add_argument("--dir", default=None,
                     help="data dir (default /tmp/sf{N}_tpch per --sf)")
     ap.add_argument("--sf", type=float, default=1.0,
@@ -95,8 +94,7 @@ def main() -> None:
     from instrument import SectionTracker, idle_gate
     from rust_query_engine_greatest_spark.queries import REGISTRY
     from rust_query_engine_greatest_spark.session import get_spark
-    from rust_query_engine_greatest_spark.sources import (bucketing, compact,
-                                                          stats)
+    from rust_query_engine_greatest_spark.sources import compact, stats
 
     if args.dir is None:
         args.dir = f"/tmp/sf{args.sf:g}_tpch"
@@ -110,10 +108,8 @@ def main() -> None:
     ensure_sf1(args.dir, sf=args.sf)
     spark = get_spark(app_name="tpch-sf1")
     prep_s = 0.0
-    if args.layout in ("compacted", "bucketed"):
+    if args.layout == "compacted":
         prep_s = compact.activate(spark, args.dir, tables=TPCH_TABLES)
-    if args.layout == "bucketed":
-        prep_s += bucketing.activate(spark, args.dir, 32)
     if not args.no_stats:
         # one-time ANALYZE (row counts + per-column NDV/min/max) + CBO:
         # catalog.load_table then serves stats-backed catalog tables so
@@ -204,7 +200,7 @@ def main() -> None:
 
     if args.mem:
         # reference tpch_mem analog: columnar in-memory cache (the
-        # _MEMORY route wins in catalog.load_table), plus one untimed
+        # cached copy wins in catalog.load_table), plus one untimed
         # warm pass so timings measure compute, not codegen/JIT
         from rust_query_engine_greatest_spark.sources import catalog as _cat
 
@@ -320,27 +316,15 @@ def _rows_close(a, b) -> bool:
 def run_official(spark, con, args, tracker) -> tuple[dict, dict]:
     from slt_runner import translate_query, translate_statement
 
-    from rust_query_engine_greatest_spark.sources import compact
+    from rust_query_engine_greatest_spark.sources.catalog import load_table
 
-    # honor --layout compacted: the Spark views read the clustered
-    # copies (partsupp is not in TPCH_TABLES — raw); the DuckDB oracle
-    # reads the originals (same rows either way). When stats are active
-    # (default) the view aliases the ANALYZEd catalog table so CBO sees
-    # row/NDV statistics through the official texts' bare table names.
-    from rust_query_engine_greatest_spark.sources import stats as _stats
-
-    src = compact.resolve(args.dir) or args.dir
+    # the Spark views read whatever catalog.load_table routes to (the
+    # compacted copies under --layout compacted, the ANALYZEd catalog
+    # tables when stats are on, so CBO sees row/NDV statistics through
+    # the official texts' bare table names); the DuckDB oracle reads
+    # the originals (same rows either way)
     for t in ALL_TABLES:
-        st = _stats.resolve(args.dir, t)
-        if st is not None:
-            spark.sql(f"CREATE OR REPLACE TEMP VIEW {t} "
-                      f"AS SELECT * FROM {st}")
-        else:
-            path = f"{src}/{t}.parquet" if t in TPCH_TABLES \
-                else f"{args.dir}/{t}.parquet"
-            if not os.path.exists(path):
-                path = f"{args.dir}/{t}.parquet"
-            spark.read.parquet(path).createOrReplaceTempView(t)
+        load_table(spark, args.dir, t).createOrReplaceTempView(t)
         try:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
                         f"read_parquet('{args.dir}/{t}.parquet')")
